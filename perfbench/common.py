@@ -1,10 +1,9 @@
 """Pieces shared by the workloads: the run context, the HTTP client,
-the process-tree RSS sampler and the query result comparison."""
+the process-tree RSS sampler and the query result comparison (rows are
+normalized by the repository's oracle check, ``tests/oracle_check.py``)."""
 
 from __future__ import annotations
 
-import datetime as dt
-import decimal
 import http.client
 import json
 import math
@@ -14,11 +13,21 @@ import time
 from dataclasses import dataclass, field
 
 import numpy as np
+from oracle_check import normalize_rows
 
 from tracing import Tracer
 
 # every set-up is repeated this many times per run; setup_s is the median
 SETUP_REPEATS = 2
+# the process tree's resident memory is sampled this often
+RSS_SAMPLE_S = 0.25
+
+
+def scaled(n: int, seconds: float) -> int:
+    """``n`` units of work per 10 s of ``--seconds``, at least 1. A run
+    does a fixed amount of work, not as much as fits in a deadline, so
+    every run measures the same mix."""
+    return max(1, round(n * seconds / 10))
 
 
 @dataclass
@@ -116,8 +125,7 @@ class RssSampler:
     """Peak resident memory of this process and all its descendants
     (the Spark JVM and its Python workers), sampled from /proc."""
 
-    def __init__(self, interval: float = 0.25):
-        self.interval = interval
+    def __init__(self):
         self.peak_bytes = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
@@ -137,7 +145,7 @@ class RssSampler:
         self.peak_bytes = max(self.peak_bytes, self._tree_rss())
 
     def _loop(self) -> None:
-        while not self._stop.wait(self.interval):
+        while not self._stop.wait(RSS_SAMPLE_S):
             self.sample()
 
     def start(self) -> "RssSampler":
@@ -149,32 +157,6 @@ class RssSampler:
         self._thread.join(timeout=5)
         self.sample()
         return self.peak_bytes / (1024 * 1024)
-
-
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 9)
-    if isinstance(v, decimal.Decimal):
-        return round(float(v), 9)
-    if isinstance(v, dt.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)):
-        return tuple(_norm(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _norm(x)) for k, x in v.items()))
-    return v
-
-
-def normalize_rows(columns: list[str], rows) -> list[tuple]:
-    """Rows with columns in name order and floats rounded, sorted: an
-    order-insensitive multiset."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return sorted(
-        (tuple(_norm(row[i]) for i in order) for row in rows),
-        key=lambda r: tuple((v is not None, type(v).__name__, v) for v in r),
-    )
 
 
 # Spark and DuckDB, and two Spark runs, may sum floats in different orders,

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import threading
 import time
 from contextlib import contextmanager
 
@@ -17,31 +16,39 @@ import pyarrow.parquet as pq
 from common import Ctx
 
 DB = "ingest"
-TABLES = {"events_a": 0.75, "events_b": 0.25}  # share of micro-batches
+TABLES = ("events_a", "events_b")
 DAYS = 8  # event days, from 2024-01-01
 # the planner clamps to now - 96 h, so days up to DAYS - 3 are compacted
 NOW = dt.datetime(2024, 1, 1) + dt.timedelta(days=DAYS)
-BATCHES_PER_PHASE = 3
+# every ingest phase commits one block of batches whose sizes, day spans
+# and tables are these lists in a seeded order, so every round does the
+# same work and the seed decides its arrangement, days and rows
+BLOCK_ROWS = (600, 1200, 1800)
+BLOCK_SPANS = (1, 2, 3)
+BLOCK_TABLES = ("events_a", "events_a", "events_b")
+BOOTSTRAP_ROWS, BOOTSTRAP_SPAN = 1200, 2
 RATE_PER_S = 2.0  # below the sustainable commit rate on 4 cores
-MAX_BATCHES = 40  # commits past the last batch start over from the first
+MAX_BLOCKS = 12  # commits past the last block start over from the first batch
 
 
 def make_batches(ctx: Ctx, out_dir: str) -> list[dict]:
-    """Seeded micro-batches as parquet files: 600-1800 rows each over
-    1-3 consecutive days, routed to a table by the TABLES skew."""
+    """Seeded micro-batches as parquet files: one bootstrap batch per
+    table, then MAX_BLOCKS blocks."""
     import datagen
 
     rng = ctx.rng(7)
+    plan = [(t, BOOTSTRAP_ROWS, BOOTSTRAP_SPAN) for t in TABLES]
+    for _ in range(MAX_BLOCKS):
+        plan += zip(rng.permutation(BLOCK_TABLES), rng.permutation(BLOCK_ROWS),
+                    rng.permutation(BLOCK_SPANS))
     batches, next_id = [], 0
-    for i in range(MAX_BATCHES):
-        n = int(rng.integers(600, 1800))
-        span = int(rng.integers(1, 4))
+    for i, (table, n, span) in enumerate(plan):
+        n, span = int(n), int(span)
         first = int(rng.integers(0, DAYS - span + 1))
         tbl = datagen.events_table(rng, n, span, first_id=next_id, first_day=first)
         path = os.path.join(out_dir, f"batch_{i:04d}.parquet")
         pq.write_table(tbl, path)
-        table = str(rng.choice(list(TABLES), p=list(TABLES.values())))
-        batches.append({"path": path, "rows": n, "table": table,
+        batches.append({"path": path, "rows": n, "table": str(table),
                         "bytes": os.path.getsize(path)})
         next_id += n
     return batches
@@ -55,38 +62,37 @@ class Ingest:
     Readers learn what changed from counters bumped to odd before and to
     even after each change: ``version`` for every commit or expiry,
     ``rows_version`` for appends only (the one change that alters record
-    counts). ``refreshes`` counts finished refreshes; ``cache_rows_version``
-    is the ``rows_version`` the metadata cache reflects."""
+    counts), ``cache_version`` for every ``refresh_all``.
+    ``cache_rows_version`` is the ``rows_version`` the metadata cache
+    reflects."""
 
-    def __init__(self, ctx: Ctx, wh: str, state: str, batches: list[dict], db: str = DB):
+    def __init__(self, ctx: Ctx, wh: str, state: str, batches: list[dict]):
         from lakehouse_admin_spark.engine import LakehouseAdmin
         from lakehouse_admin_spark.sources.ledger import PartitionField
 
-        self.ctx, self.batches, self.db = ctx, batches, db
+        self.ctx, self.batches = ctx, batches
         # task_concurrency stays at its default of 1: two optimize tasks
         # on one table fail with CommitConflictError (see README.md)
         self.admin = LakehouseAdmin(ctx.spark, wh, state_dir=state)
         schema = self._read(batches[0]["path"]).schema
         day = PartitionField(source="ts", transform="day", name="ts_day")
         kind = PartitionField(source="event_type", transform="identity", name="event_type")
-        self.admin.create_table(db, "events_a", schema, [day])
-        self.admin.create_table(db, "events_b", schema, [day, kind])
+        self.admin.create_table(DB, "events_a", schema, [day])
+        self.admin.create_table(DB, "events_b", schema, [day, kind])
         self.committed = {t: 0 for t in TABLES}
         self.user_bytes = 0
         self.next_batch = 0
         self.lat: list[float] = []
         self.late: list[float] = []
         self.cron: list[float] = []
-        self.cache_gate = threading.Lock()
         self.phase = "ingest"
-        self.version = self.rows_version = self.refreshes = 0
+        self.version = self.rows_version = self.cache_version = 0
         self.cache_rows_version = -1
+        self.races: list[str] = []  # cached reads that failed beside a refresh
 
-    def stable(self, v: int) -> bool:
-        return v % 2 == 0 and self.version == v
-
-    def stable_rows(self, v: int) -> bool:
-        return v % 2 == 0 and self.rows_version == v
+    def unchanged(self, counter: str, v: int) -> bool:
+        """No change of kind ``counter`` was under way at ``v`` or since."""
+        return v % 2 == 0 and getattr(self, counter) == v
 
     @contextmanager
     def _changing(self, rows: bool):
@@ -108,10 +114,12 @@ class Ingest:
             return f"KeyError: {ex}"
 
     def refresh(self) -> None:
-        with self.cache_gate:
+        self.cache_version += 1
+        try:
             self.admin.refresh_all()
             self.cache_rows_version = self.rows_version
-            self.refreshes += 1
+        finally:
+            self.cache_version += 1
 
     def _read(self, path: str):
         """A batch file as the tables' schema: ts is written as a zoneless
@@ -122,7 +130,7 @@ class Ingest:
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
     def commit(self, batch: dict) -> None:
-        tbl = self.admin.table(self.db, batch["table"])
+        tbl = self.admin.table(DB, batch["table"])
         with self._changing(rows=True):
             tbl.append(self._read(batch["path"]))
         self.committed[batch["table"]] += batch["rows"]
@@ -130,16 +138,15 @@ class Ingest:
 
     def bootstrap(self) -> None:
         """One commit per table, so the first refresh has rows to cache."""
-        first = [next(i for i, b in enumerate(self.batches) if b["table"] == t) for t in TABLES]
-        for i in first:
-            self.commit(self.batches[i])
-        self.next_batch = max(first) + 1
+        for batch in self.batches[:len(TABLES)]:
+            self.commit(batch)
+        self.next_batch = len(TABLES)
 
     def ingest_phase(self) -> None:
         """Open loop: batch i is due at start + i / RATE_PER_S; its latency
         runs from its due time to the end of its commit."""
         start = time.perf_counter()
-        for i in range(BATCHES_PER_PHASE):
+        for i in range(len(BLOCK_ROWS)):
             due = start + i / RATE_PER_S
             now = time.perf_counter()
             if now < due:
@@ -163,7 +170,7 @@ class Ingest:
         from lakehouse_admin_spark import maintenance, tasks
 
         a, ctx = self.admin, self.ctx
-        live_before = sum(len(a.table(self.db, t).live_files()) for t in TABLES)
+        live_before = sum(len(a.table(DB, t).live_files()) for t in TABLES)
         self.phase = "maintenance"
         t0 = time.perf_counter()
         self.refresh()
@@ -173,8 +180,8 @@ class Ingest:
             tasks.run_worker_pool(a.tasks, a.catalog, max_tasks=10_000)
             now_ms = int(time.time() * 1000)
             for t in TABLES:
-                maintenance.expire_snapshots(a.table(self.db, t), older_than_ms=now_ms)
-                maintenance.remove_orphan_files(a.table(self.db, t))
+                maintenance.expire_snapshots(a.table(DB, t), older_than_ms=now_ms)
+                maintenance.remove_orphan_files(a.table(DB, t))
         self.cron.append(time.perf_counter() - t0)
         self.phase = "ingest"
 
@@ -186,9 +193,9 @@ class Ingest:
                 rewritten += int(task.result.get("procedure", {})
                                  .get("rewritten_data_files_count", 0))
         for t in TABLES:
-            rows = a.table(self.db, t).count_rows()[0]
+            rows = a.table(DB, t).count_rows()[0]
             ctx.op(rows == self.committed[t], f"count_rows {t}: {rows} != {self.committed[t]}")
-        live_after = sum(len(a.table(self.db, t).live_files()) for t in TABLES)
+        live_after = sum(len(a.table(DB, t).live_files()) for t in TABLES)
         if rewritten:
             ctx.op(live_after < live_before,
                    f"live files did not fall after compaction: {live_before} -> {live_after}")

@@ -1,17 +1,16 @@
 """pipeline_batch: one client runs a fixed list of LLM-data-pipeline and
 relational operator queries — a cold pass (first touch builds the
-indexes), then warm passes for the rest of the run. The admin plane is
-idle. Each query's result is checked against its DuckDB oracle once per
-run, untimed, and every warm result must equal the cold one (floats within
+indexes), then a fixed number of warm passes. The admin plane is idle.
+Each query's result is checked against its DuckDB oracle once per run,
+untimed, and every warm result must equal the cold one (floats within
 ``common.REL_TOL``)."""
 
 from __future__ import annotations
 
-import os
-import shutil
 import time
 
-from common import SETUP_REPEATS, Ctx, results_match
+from common import SETUP_REPEATS, Ctx, results_match, scaled
+from oracle_check import run_oracle
 from stats import median, percentile
 
 # one per operator module plus the index builders. A run must stay short,
@@ -33,6 +32,7 @@ QUERIES = [
 # codebooks, LSH buckets, the exact k-NN edge index)
 INDEX_QUERIES = ["minhash_near_dup", "ann_ivf_pq_rerank", "embedding_lsh_near_dup", "knn_graph"]
 DATA = dict(sf=0.003, events=2_000, event_days=30, documents=500, embeddings=500)
+WARM_PASSES = 1  # per 10 s of --seconds
 
 
 def _module(spec) -> str:
@@ -49,13 +49,12 @@ def run_query(ctx: Ctx, spec, data_dir: str, phase: str):
         return time.perf_counter() - t, df.columns, rows
 
 
-def warm_loop(ctx: Ctx, specs, data_dir: str, cold: dict, seconds: float) -> dict:
-    """Whole warm passes within ``seconds``: a pass starts only if a pass
-    as long as the last one still ends in time; the first always runs."""
+def warm_loop(ctx: Ctx, specs, data_dir: str, cold: dict) -> dict:
+    """A fixed number of whole warm passes."""
     lat: dict[str, list[float]] = {s.name: [] for s in specs}
     passes: list[float] = []
     t0 = time.perf_counter()
-    while not passes or time.perf_counter() - t0 + passes[-1] <= seconds:
+    for _ in range(scaled(WARM_PASSES, ctx.seconds)):
         tp = time.perf_counter()
         for spec in specs:
             try:
@@ -71,21 +70,7 @@ def warm_loop(ctx: Ctx, specs, data_dir: str, cold: dict, seconds: float) -> dic
 
 
 def oracle_check(ctx: Ctx, spec, data_dir: str, cols, rows) -> None:
-    import duckdb
-
-    from lakehouse_admin_spark.sources.tables import TABLES
-
-    con = duckdb.connect()
-    try:
-        con.execute("SET threads TO 2")
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"read_parquet('{os.path.join(data_dir, t + '.parquet')}')")
-        cur = con.execute(spec.oracle)
-        ocols = [d[0] for d in cur.description]
-        orows = cur.fetchall()
-    finally:
-        con.close()
+    ocols, orows = run_oracle(spec.oracle, data_dir)
     ok = results_match(ocols, orows, cols, rows)
     ctx.op(ok, f"{spec.name}: result differs from its DuckDB oracle "
                f"({len(rows)} rows vs {len(orows)})")
@@ -96,42 +81,35 @@ def run(ctx: Ctx) -> dict:
     from lakehouse_admin_spark import registry
     from lakehouse_admin_spark.sources.tables import TABLES, load_table
 
-    # set-up: generate the inputs and scan every table once, repeated
-    setups, data_dir = [], None
-    for i in range(SETUP_REPEATS):
-        if data_dir is not None:
-            shutil.rmtree(data_dir, ignore_errors=True)
+    data_dir = ctx.path("data")
+    ctx.info["rows"] = datagen.write_dataset(data_dir, ctx.seed, **DATA)
+    # set-up: load the operators and scan every table once, repeated
+    setups = []
+    for _ in range(SETUP_REPEATS):
         t = time.perf_counter()
-        data_dir = ctx.path(f"data{i}")
-        ctx.info["rows"] = datagen.write_dataset(data_dir, ctx.seed, **DATA)
         registry.load_all_operators()
         for name in TABLES:
             load_table(ctx.spark, data_dir, name).count()
         setups.append(time.perf_counter() - t)
     specs = [registry.QUERIES[q] for q in QUERIES]
 
-    # cold pass: first touch, index builds included
+    # cold pass (first touch, index builds included), then the warm passes;
+    # both traced in a traced run
     ctx.tracer.recording = ctx.traced
-    cold, cold_rows = {}, {}
-    for spec in specs:
-        try:
-            secs, cols, rows = run_query(ctx, spec, data_dir, "cold")
-        except Exception as ex:  # noqa: BLE001 — a query error is a failed op
-            ctx.op(False, f"{spec.name} (cold): {type(ex).__name__}: {ex}")
-            continue
-        ctx.op(True, spec.name)
-        cold[spec.name] = secs
-        cold_rows[spec.name] = (cols, rows)
-    ctx.tracer.recording = False
-
-    res = warm_loop(ctx, specs, data_dir, cold_rows, ctx.seconds)
-    traced = None
-    if ctx.traced:
-        ctx.tracer.recording = True
-        try:
-            traced = warm_loop(ctx, specs, data_dir, cold_rows, ctx.seconds)
-        finally:
-            ctx.tracer.recording = False
+    try:
+        cold, cold_rows = {}, {}
+        for spec in specs:
+            try:
+                secs, cols, rows = run_query(ctx, spec, data_dir, "cold")
+            except Exception as ex:  # noqa: BLE001 — a query error is a failed op
+                ctx.op(False, f"{spec.name} (cold): {type(ex).__name__}: {ex}")
+                continue
+            ctx.op(True, spec.name)
+            cold[spec.name] = secs
+            cold_rows[spec.name] = (cols, rows)
+        res = warm_loop(ctx, specs, data_dir, cold_rows)
+    finally:
+        ctx.tracer.recording = False
 
     for spec in specs:  # untimed: each query once against its oracle
         if spec.name in cold_rows and spec.oracle:
@@ -139,19 +117,18 @@ def run(ctx: Ctx) -> dict:
 
     lat = [x for xs in res["lat"].values() for x in xs]
     ctx.info["samples"] = {"warm_queries": len(lat), "warm_passes": len(res["passes"])}
-    out = {
+    if ctx.traced:
+        return {"layers": pipeline_layers(ctx, specs, cold, res)}
+    return {
         "setup_s": median(setups),
         "op_p50_ms": median(lat) * 1000,
         "op_p90_ms": percentile(lat, 90) * 1000,
         "ops_per_s": len(lat) / res["elapsed"],
         "cycle_s": median(res["passes"]),
     }
-    if traced is not None:
-        out["layers"] = pipeline_layers(ctx, specs, cold, res, traced)
-    return out
 
 
-def pipeline_layers(ctx: Ctx, specs, cold: dict, plain: dict, traced: dict) -> dict:
+def pipeline_layers(ctx: Ctx, specs, cold: dict, warm: dict) -> dict:
     tr = ctx.tracer
     tr.finish()
     warm_spans = [sp for sp in tr.spans
@@ -165,12 +142,10 @@ def pipeline_layers(ctx: Ctx, specs, cold: dict, plain: dict, traced: dict) -> d
         layers[f"operators.{module}.serve_s"] = median(walls)
         # build: what the first touch cost beyond a warm call
         layers[f"operators.{module}.build_s"] = sum(
-            cold.get(s.name, 0.0) - median(plain["lat"][s.name]) for s in mine)
+            cold.get(s.name, 0.0) - median(warm["lat"][s.name]) for s in mine)
     layers["operators.index_build_s"] = sum(cold.get(q, 0.0) for q in INDEX_QUERIES)
     n = max(len(warm_spans), 1)
     layers["operators.spark_jobs_per_query"] = sum(sp.get("jobs", 0) for sp in warm_spans) / n
     layers["operators.spark_tasks_per_query"] = sum(sp.get("tasks", 0) for sp in warm_spans) / n
-    plain_lat = [x for xs in plain["lat"].values() for x in xs]
-    traced_lat = [x for xs in traced["lat"].values() for x in xs]
-    layers["trace.overhead_frac"] = median(traced_lat) / median(plain_lat) - 1
+    layers["trace.op_p50_ms"] = median([x for xs in warm["lat"].values() for x in xs]) * 1000
     return layers

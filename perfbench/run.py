@@ -4,13 +4,14 @@
 
 Runs one workload against the ``lakehouse_admin_spark`` package of the
 checkout this file sits in, from one process. Inputs are generated from
-``--seed``; every answer is checked. The last stdout line is the result:
+``--seed``; every answer is checked. A run measures a fixed amount of work,
+which ``--seconds`` scales (see README.md). The last stdout line is the result:
 
     {"correct": bool, "attempted": n, "failed": n, "metrics": {name: {"value", "unit"}}}
 
 ``--trace 0`` reports the end-to-end metrics of BENCHMARK.json;
-``--trace 1`` runs the workload once untraced and once traced, reports
-the per-layer metrics, and writes the spans to
+``--trace 1`` runs the workload with its measured phases traced, reports
+the per-layer metrics (see README.md), and writes the spans to
 ``.perfbench_out/trace-<workload>-<seed>.json``. All scratch files live
 in ``.perfbench_tmp/`` and are removed at exit.
 """
@@ -121,7 +122,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = None
     try:
         env = _pin_env(tmp)
-        sys.path[:0] = [HERE, ROOT]
+        # tests/ for the repository's oracle check (run_oracle, normalize_rows)
+        sys.path[:0] = [HERE, ROOT, os.path.join(ROOT, "tests")]
         from common import Ctx, RssSampler
         from tracing import Tracer
 
@@ -157,6 +159,7 @@ def main(argv: list[str] | None = None) -> int:
         if args.trace:
             ctx.tracer.finish()
             values = {"session.start_s": session_start, "process.peak_rss_mb": peak_mb,
+                      "trace.overhead_frac": ctx.tracer.overhead_frac(),
                       **ctx.tracer.span_metrics(wanted),
                       **ctx.tracer.http_metrics(), **out["layers"]}
             os.makedirs(os.path.join(ROOT, ".perfbench_out"), exist_ok=True)
@@ -164,7 +167,7 @@ def main(argv: list[str] | None = None) -> int:
             ctx.tracer.dump(dump, {"workload": args.workload, "seed": args.seed})
             print(f"perfbench: spans written to {dump}", file=sys.stderr)
         else:
-            values = {k: v for k, v in out.items() if k != "layers"}
+            values = out
         import pyspark
 
         print(json.dumps({"env": {

@@ -30,7 +30,7 @@ from stats import median, percentile
 
 
 class Tracer:
-    def __init__(self, sc=None):
+    def __init__(self, sc):
         self.sc = sc
         self.recording = False
         self.spans: list[dict] = []
@@ -61,6 +61,7 @@ class Tracer:
         if not self.recording:
             yield None
             return
+        t_open = time.perf_counter()
         st = self._stack()
         if trace is None:
             trace, inherited = self.current()
@@ -70,7 +71,7 @@ class Tracer:
         sp = {"id": next(self._ids), "name": name, "trace": trace, "parent": parent,
               "thread": threading.get_ident(), "attrs": dict(attrs)}
         prev_group = None
-        if jobs and self.sc is not None:
+        if jobs:
             prev_group = self.sc.getLocalProperty("spark.jobGroup.id")
             sp["job_group"] = f"perfbench-{sp['id']}"
             self.sc.setJobGroup(sp["job_group"], name)
@@ -91,6 +92,9 @@ class Tracer:
                     self.sc.setLocalProperty("spark.jobGroup.id", None)
             with self._lock:
                 self.spans.append(sp)
+            # the tracer's own time on this call path: opening and closing
+            # the span, job group switches included
+            sp["overhead_s"] = (sp["start"] - t_open) + (time.perf_counter() - sp["end"])
 
     # ------------------------------------------------------------------
     def finish(self) -> None:
@@ -103,8 +107,6 @@ class Tracer:
     def resolve_job_counts(self) -> None:
         """Fill ``jobs``/``tasks`` of every job-counted span, after the
         listener bus has delivered every job event."""
-        if self.sc is None:
-            return
         self.sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = self.sc.statusTracker()
         for sp in self.spans:
@@ -134,6 +136,12 @@ class Tracer:
                     covered += hi - lo
                     cursor = hi
             sp["self_s"] = (sp["end"] - sp["start"]) - covered
+
+    def overhead_frac(self) -> float:
+        """The tracer's own time in every span over the wall of the root
+        spans (requests, rounds, queries)."""
+        roots = sum(sp["end"] - sp["start"] for sp in self.spans if sp["parent"] is None)
+        return sum(sp["overhead_s"] for sp in self.spans) / roots if roots else 0.0
 
     def by_name(self, name: str) -> list[dict]:
         return [sp for sp in self.spans if sp["name"] == name]
